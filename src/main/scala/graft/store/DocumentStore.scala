@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch
 
 /** Versioned copy-on-write parquet store: the engine's answer to the
@@ -33,6 +33,22 @@ import org.apache.spark.util.sketch
   * atomically (write temp + rename with Options.Rename.OVERWRITE);
   * readers see the old version until the swap, and a crash mid-write
   * leaves garbage segments but a consistent table.
+  *
+  * Every mutation takes ONE rewrite path. It reads one [[Snapshot]]
+  * (base version, manifest, partition layout, committed schema) and
+  * takes every later decision from it. It locates the partitions it
+  * must rewrite ([[victims]]), then runs [[rewrite]]: read those
+  * partitions, apply the mutation's transform, write new segments, and
+  * commit `(manifest -- touched) ++ written`. The rewrite has two
+  * executors that share the snapshot, the partition-key function, the
+  * driver-local segment writer and the commit:
+  *  - Spark: the transform is a DataFrame plan, written by
+  *    [[writeSegments]];
+  *  - the driver: tiny keyed upserts into kB-sized partitions merge
+  *    rows in memory ([[localUpsert]]), written by parquet-mr.
+  * [[append]] adds segments instead of rewriting, and
+  * [[create]]/[[repartitionBy]] write a whole new layout; both commit
+  * through the same CAS.
   *
   * All metadata IO goes through the Hadoop FileSystem API (resolved from
   * the root path's scheme), so the store works unchanged on local disk,
@@ -85,9 +101,13 @@ class DocumentStore(val spark: SparkSession, root: String) {
   private def dirsOf(m: Map[String, String]): Seq[String] =
     m.values.flatMap(splitDirs).toSeq
 
+  /** A per-version metadata file under `_versions`. */
+  private def versionFile(table: String, name: String): HPath =
+    new HPath(new HPath(tdir(table), "_versions"), name)
+
   private[store] def manifest(table: String, v: Int): Map[String, String] = {
     if (v == 0) return Map.empty // table never created
-    val f = new HPath(new HPath(tdir(table), "_versions"), s"v$v.manifest")
+    val f = versionFile(table, s"v$v.manifest")
     // a committed version MUST have its manifest: reading a corrupted
     // table (_CURRENT pointing at a missing manifest) as empty would
     // silently turn data loss into an empty-table answer
@@ -99,8 +119,46 @@ class DocumentStore(val spark: SparkSession, root: String) {
       }.toMap
   }
 
-  /** Commit manifest `m` as version `v = base + 1`, with `base` the
-    * version this mutation READ. The epoch claim is a DIRECTORY rename
+  /** One immutable view of a table at one committed version: its
+    * manifest, partition layout and committed schema. Each mutation
+    * reads ONE snapshot and takes every decision from it — victim
+    * location, segment write, commit and the sidecar refresh — so no
+    * step can see another version's layout (a layout read at a
+    * different moment than the manifest is how stats came to be keyed
+    * by a replaced partition column). All fields are read by version
+    * number from immutable files, so the view cannot tear. */
+  private case class Snapshot(table: String, version: Int,
+                              manifest: Map[String, String],
+                              layout: Option[String],
+                              schema: Option[StructType]) {
+    def next: Int = version + 1
+
+    /** Segment dirs of the named partitions. */
+    def dirs(parts: Set[String]): Seq[String] =
+      dirsOf(manifest.filter { case (k, _) => parts.contains(k) })
+
+    /** The schema of the rows the table holds: none when it holds no
+      * partition; else the committed schema or, for a table written
+      * before schema tracking, the one parquet infers. */
+    lazy val tableSchema: Option[StructType] =
+      if (manifest.isEmpty) None
+      else schema.orElse(Some(readDirs(None, dirsOf(manifest)).schema))
+  }
+
+  private def snapshot(table: String, v: Int): Snapshot =
+    Snapshot(table, v, manifest(table, v), partColAt(table, v), schemaOf(table, v))
+
+  private def snapshot(table: String): Snapshot = snapshot(table, currentVersion(table))
+
+  /** Commit `m` by version numbers: `v` must be `base + 1`. */
+  private[store] def commit(table: String, base: Int, v: Int, m: Map[String, String],
+                            schemaJson: Option[String]): Unit = {
+    require(v == base + 1, s"commit must target base+1 (got base=$base v=$v)")
+    commit(snapshot(table, base), m, schemaJson)
+  }
+
+  /** Commit manifest `m` as version `s.next`, with `s` the snapshot
+    * this mutation READ. The epoch claim is a DIRECTORY rename
     * without overwrite (`.claim-v<N>-<token>` → `v<N>.claim`) — the CAS
     * primitive: POSIX rename atomically refuses a non-empty destination
     * directory (the marker file inside guarantees non-emptiness), and
@@ -115,19 +173,20 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * `_CURRENT` swap never happened) blocks the epoch until [[vacuum]]
     * clears it — commit NEVER clears a claim itself, because a claim it
     * cannot distinguish from debris may belong to a live committer
-    * between claim and swap. */
-  /** @param pc Some(newLayout) when this commit CHANGES the partition
-    *   column (create/repartitionBy); None carries the base version's
-    *   layout forward. The effective layout is published as
+    * between claim and swap.
+    *
+    * @param layout Some(newLayout) when this commit CHANGES the
+    *   partition column (create/repartitionBy); None carries the base
+    *   snapshot's layout forward. The effective layout is published as
     *   `v<N>.partcol` under the SAME claim protection as the manifest,
     *   so a layout change and its data always become visible in one
     *   atomic swap — a table-level pointer alone would leave a crash
     *   window where pruned reads consult the new column against an
-    *   old-layout manifest (silently empty results). */
-  private[store] def commit(table: String, base: Int, v: Int, m: Map[String, String],
-                     schemaJson: Option[String],
-                     pc: Option[Option[String]] = None): Unit = {
-    require(v == base + 1, s"commit must target base+1 (got base=$base v=$v)")
+    *   old-layout manifest (silently empty results). The stats and
+    *   Bloom refresh key the rewritten partitions by that same layout. */
+  private def commit(s: Snapshot, m: Map[String, String], schemaJson: Option[String],
+                     layout: Option[Option[String]] = None): Unit = {
+    val table = s.table; val v = s.next
     val vd = new HPath(tdir(table), "_versions"); fs.mkdirs(vd)
     val token = java.util.UUID.randomUUID().toString
     val claimDir = new HPath(vd, s"v$v.claim")
@@ -151,13 +210,13 @@ class DocumentStore(val spark: SparkSession, root: String) {
       // lost the race: drop the segment dirs this attempt wrote (the
       // manifest entries not carried over from the base version)
       fs.delete(tmpDir, true)
-      val carried = dirsOf(manifest(table, base)).toSet
+      val carried = dirsOf(s.manifest).toSet
       dirsOf(m).toSet.diff(carried).foreach { dir =>
         val p = new HPath(dir)
         if (fs.exists(p)) fs.delete(p, true)
       }
       throw new java.util.ConcurrentModificationException(
-        s"concurrent commit on table '$table': read version $base but epoch $v " +
+        s"concurrent commit on table '$table': read version ${s.version} but epoch $v " +
           s"was claimed by another writer; mutation NOT applied (segments cleaned). " +
           s"If no writer is live, the claim is crash debris — run vacuum to clear it")
     }
@@ -166,33 +225,74 @@ class DocumentStore(val spark: SparkSession, root: String) {
     schemaJson.foreach(js => writeString(new HPath(vd, s"v$v.schema"), js))
     // layout rides with the version (carry-forward when unchanged), so
     // every committed version knows its own partition column
-    writeString(new HPath(vd, s"v$v.partcol"),
-      pc.getOrElse(partColAt(table, base)).getOrElse(""))
-    graft.tools.Timing(s"commit-stats-$table")(refreshStats(table, base, v, m))
-    graft.tools.Timing(s"commit-blooms-$table")(refreshBlooms(table, base, v, m))
+    val after = Snapshot(table, v, m, layout.getOrElse(s.layout), schemaJson.map(parseSchema))
+    writeString(new HPath(vd, s"v$v.partcol"), after.layout.getOrElse(""))
+    graft.tools.Timing(s"commit-stats-$table")(refreshStats(s, after))
+    graft.tools.Timing(s"commit-blooms-$table")(refreshBlooms(s, after))
     val tmp = new HPath(tdir(table), s"_CURRENT.tmp$v")
     writeString(tmp, v.toString)
     fc.rename(tmp, new HPath(tdir(table), "_CURRENT"), Options.Rename.OVERWRITE)
   }
 
+  /** Characters a partition value may not carry into a directory name;
+    * each is replaced by `_`, on the Spark side ([[partExpr]]) and on
+    * the driver side ([[safeKey]]) alike. */
+  private val UnsafeKeyChars = "[^A-Za-z0-9_\\-]"
+
   /** The partition key expression: user column, or a single bucket for
     * unpartitioned tables. Values are directory-name-safe strings. */
   private def partExpr(partitionCol: Option[String]): Column = partitionCol match {
     case Some(c) => regexp_replace(coalesce(col(c).cast("string"), lit("__null")),
-      "[^A-Za-z0-9_\\-]", "_")
+      UnsafeKeyChars, "_")
     case None => lit("all")
   }
 
-  /** Write `df`'s segments under an ATTEMPT-UNIQUE directory
-    * (`data/v<N>-<token>`): two optimistic committers racing toward the
-    * same epoch must never share a physical dir, or the loser's write
-    * would clobber the winner's data before the CAS even runs. Returns
-    * the partition→dir map plus the schema JSON for the commit to
-    * publish — the version's logical schema rides next to its manifest
-    * so reads NEVER infer (or merge) schemas from data files: at 100 TB
-    * footer sniffing across segment dirs is an IO pass of its own, and
-    * schema evolution (upsert adding a column) would otherwise depend
-    * on which segment the reader lists first. */
+  /** Driver-side [[partExpr]] sanitiser for a partition value already in
+    * string form (caller-supplied partition hints, driver-local rows). */
+  private def safeKey(value: String): String = value.replaceAll(UnsafeKeyChars, "_")
+
+  /** Distinct partition keys of `df`'s rows under layout `pc` — one Spark job. */
+  private def partKeys(df: DataFrame, pc: Option[String]): Set[String] =
+    df.select(partExpr(pc).as("__part")).distinct()
+      .collect().map(_.getString(0)).toSet
+
+  /** Victim location: the partitions among `among` that hold a row whose
+    * `keys` tuple appears in `probe`. When the layout column is one of
+    * the keys, a matching row can only live in the probe's own
+    * partitions, so those are the answer with no table scan; otherwise
+    * a column-pruned left-semi key scan over `among` finds them. */
+  private def victims(s: Snapshot, probe: DataFrame, keys: Seq[String],
+                      among: Map[String, String]): Set[String] =
+    if (s.layout.exists(keys.contains)) partKeys(probe, s.layout)
+    else if (among.isEmpty) Set.empty
+    else partKeys(readDirs(s.schema, dirsOf(among))
+      .join(probe.select(keys.map(col): _*).distinct(), keys, "left_semi"), s.layout)
+
+  /** The copy-on-write rewrite every keyed and predicate mutation runs:
+    * read the `touched` partitions of `s` (or, when none exist yet, an
+    * empty frame of the table's schema — of `shape` when the table
+    * holds no partition), apply `transform`, write the result as new
+    * segments, and commit `(manifest -- touched) ++ written`. Every
+    * other partition is carried by manifest reference. [[localUpsert]]
+    * is the same rewrite executed on the driver. */
+  private def rewrite(s: Snapshot, touched: Set[String], sortBy: Seq[String] = Nil,
+                      shape: StructType = StructType(Nil))
+                     (transform: DataFrame => DataFrame): Unit = {
+    val dirs = s.dirs(touched)
+    // an empty LOCAL relation, so the optimizer drops whatever the
+    // transform joins against it instead of running that join
+    val cur =
+      if (dirs.nonEmpty) readDirs(s.schema, dirs)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        s.tableSchema.getOrElse(shape))
+    commitRewrite(s, touched, writeSegments(s.table, transform(cur), s.next, s.layout, sortBy))
+  }
+
+  /** The commit both rewrite executors end with. */
+  private def commitRewrite(s: Snapshot, touched: Set[String],
+                            written: (Map[String, String], String)): Unit =
+    commit(s, (s.manifest -- touched) ++ written._1, Some(written._2))
+
   /** Rows of a LocalRelation-rooted plan (unwrapping repartition/coalesce
     * wrappers), when at most `maxRows` — the driver-local write fast
     * path's gate. None for anything distributed: this must NEVER pull
@@ -221,44 +321,55 @@ class DocumentStore(val spark: SparkSession, root: String) {
       case None => Some(_ => "all")
       case Some(c) =>
         val idx = schema.fieldIndex(c)
-        def sanitized(r: Row): String =
-          if (r.isNullAt(idx)) "__null"
-          else r.get(idx).toString.replaceAll("[^A-Za-z0-9_\\-]", "_")
         schema(idx).dataType match {
-          case org.apache.spark.sql.types.StringType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.BooleanType =>
-            Some(sanitized(_))
+          case StringType | IntegerType | LongType | BooleanType =>
+            Some(r => if (r.isNullAt(idx)) "__null" else safeKey(r.get(idx).toString))
           case _ => None
         }
     }
 
+  /** A fresh attempt-unique segment dir for version `v`, and its token. */
+  private def attemptDir(table: String, v: Int): (HPath, String) = {
+    val token = java.util.UUID.randomUUID().toString.take(8)
+    (new HPath(new HPath(tdir(table), "data"), s"v$v-$token"), token)
+  }
+
+  /** The driver-local segment writer: `rows` grouped by `keyFn`, one
+    * parquet-mr file per partition dir. */
+  private def writeLocal(table: String, v: Int, schema: StructType, rows: Seq[Row],
+                         keyFn: Row => String): Map[String, String] = {
+    val (out, token) = attemptDir(table, v)
+    rows.groupBy(keyFn).map { case (k, rs) =>
+      val dir = new HPath(out, s"__part=$k")
+      fs.mkdirs(dir)
+      LocalParquet.write(hconf, new HPath(dir, s"part-00000-$token.parquet"), schema, rs)
+      k -> dir.toString
+    }
+  }
+
+  /** Write `df`'s segments under an ATTEMPT-UNIQUE directory
+    * (`data/v<N>-<token>`): two optimistic committers racing toward the
+    * same epoch must never share a physical dir, or the loser's write
+    * would clobber the winner's data before the CAS even runs. Returns
+    * the partition→dir map plus the schema JSON for the commit to
+    * publish — the version's logical schema rides next to its manifest
+    * so reads NEVER infer (or merge) schemas from data files: at 100 TB
+    * footer sniffing across segment dirs is an IO pass of its own, and
+    * schema evolution (upsert adding a column) would otherwise depend
+    * on which segment the reader lists first. */
   private[store] def writeSegments(table: String, df: DataFrame, v: Int,
                             partitionCol: Option[String],
                             sortBy: Seq[String] = Nil): (Map[String, String], String) = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val out = new HPath(new HPath(tdir(table), "data"), s"v$v-$token")
     // METADATA-SCALE FAST PATH (guide §5): a tiny frame already on the
     // driver (1-row meta tables, a chat session row) does not need a
     // Spark write job — plan+schedule+commit cost ~200-900 ms per call
     // where parquet-mr writes the same file in ~10 ms. Strictly gated:
     // rows must be a LocalRelation (never collects computed data),
     // atomic types only, no sortBy, replicable partition key.
-    if (sortBy.isEmpty && LocalParquet.supports(df.schema)) {
-      localPartKey(partitionCol, df.schema).foreach { keyFn =>
-        localTinyRows(df).foreach { rows =>
-          val parts = rows.groupBy(keyFn).map { case (k, rs) =>
-            val dir = new HPath(out, s"__part=$k")
-            fs.mkdirs(dir)
-            LocalParquet.write(hconf, new HPath(dir, s"part-00000-$token.parquet"),
-              df.schema, rs)
-            k -> dir.toString
-          }
-          return (parts, df.schema.json)
-        }
-      }
-    }
+    if (sortBy.isEmpty && LocalParquet.supports(df.schema))
+      for (keyFn <- localPartKey(partitionCol, df.schema); rows <- localTinyRows(df))
+        return (writeLocal(table, v, df.schema, rows, keyFn), df.schema.json)
+    val (out, _) = attemptDir(table, v)
     val keyed = df.withColumn("__part", partExpr(partitionCol))
     // the dynamic-partition writer sorts each task by __part (unstably)
     // unless the incoming ordering already leads with it — so clustering
@@ -278,19 +389,22 @@ class DocumentStore(val spark: SparkSession, root: String) {
     (parts, df.schema.json)
   }
 
-  /** The committed logical schema of version `v` (minus the physical
-    * `__part` layout column). None for tables written before schema
-    * tracking — readers then fall back to parquet inference. */
-  private def schemaOf(table: String, v: Int): Option[StructType] =
-    readString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.schema"))
-      .map(s => StructType(DataType.fromJson(s).asInstanceOf[StructType]
-        .filterNot(_.name == "__part")))
+  /** A committed schema file's body as the logical schema (minus the
+    * physical `__part` layout column). */
+  private def parseSchema(json: String): StructType =
+    StructType(DataType.fromJson(json).asInstanceOf[StructType].filterNot(_.name == "__part"))
 
-  /** Read segment dirs under version `v`'s committed schema: old files
-    * missing a later-added column yield nulls (standard parquet column
-    * clipping), and no footer is ever opened for schema discovery. */
-  private def readDirs(table: String, v: Int, dirs: Seq[String]): DataFrame =
-    schemaOf(table, v) match {
+  /** The committed logical schema of version `v`. None for tables
+    * written before schema tracking — readers then fall back to parquet
+    * inference. */
+  private def schemaOf(table: String, v: Int): Option[StructType] =
+    readString(versionFile(table, s"v$v.schema")).map(parseSchema)
+
+  /** Read segment dirs under a committed schema: old files missing a
+    * later-added column yield nulls (standard parquet column clipping),
+    * and no footer is ever opened for schema discovery. */
+  private def readDirs(schema: Option[StructType], dirs: Seq[String]): DataFrame =
+    schema match {
       case Some(sc) => spark.read.schema(sc).parquet(dirs: _*)
       case None => spark.read.parquet(dirs: _*)
     }
@@ -303,11 +417,11 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * columns at read time (the same lever compact exposes). */
   def create(table: String, df: DataFrame, partitionCol: Option[String] = None,
              sortBy: Seq[String] = Nil): Unit = {
-    val v0 = currentVersion(table); val v = v0 + 1
+    val s = snapshot(table)
     fs.mkdirs(tdir(table))
     savePartCol(table, partitionCol)
-    val (written, schema) = writeSegments(table, df, v, partitionCol, sortBy)
-    commit(table, v0, v, written, Some(schema), pc = Some(partitionCol))
+    val (written, schema) = writeSegments(table, df, s.next, partitionCol, sortBy)
+    commit(s, written, Some(schema), layout = Some(partitionCol))
   }
 
   private def savePartCol(table: String, pc: Option[String]): Unit =
@@ -317,14 +431,11 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * record, falling back to the table-level `_PARTCOL` for versions
     * committed before per-version layouts existed. */
   private def partColAt(table: String, v: Int): Option[String] =
-    readString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.partcol")) match {
+    readString(versionFile(table, s"v$v.partcol")) match {
       case Some(s) => Some(s.trim).filter(_.nonEmpty)
       case None =>
         readString(new HPath(tdir(table), "_PARTCOL")).map(_.trim).filter(_.nonEmpty)
     }
-
-  private def partCol(table: String): Option[String] =
-    partColAt(table, currentVersion(table))
 
   /** Change the table's partition column ONLINE — the
     * `ALTER TABLE … PARTITIONED BY` of the store: one full COW rewrite
@@ -338,19 +449,20 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * min/max-skipping lever, as in create). */
   def repartitionBy(table: String, newPartitionCol: Option[String],
                     sortBy: Seq[String] = Nil): Unit = {
-    val v0 = currentVersion(table); val v = v0 + 1
-    val snap = readVersion(table, v0)
-    val (written, schema) = writeSegments(table, snap, v, newPartitionCol, sortBy)
-    commit(table, v0, v, written, Some(schema), pc = Some(newPartitionCol))
+    val s = snapshot(table)
+    val (written, schema) =
+      writeSegments(table, readVersion(table, s.version), s.next, newPartitionCol, sortBy)
+    commit(s, written, Some(schema), layout = Some(newPartitionCol))
     savePartCol(table, newPartitionCol) // legacy mirror, post-publish
   }
 
   /** Snapshot read of the current version (no partial states visible). */
-  def read(table: String): DataFrame = {
-    val v = currentVersion(table)
+  def read(table: String): DataFrame = readAt(table, currentVersion(table))
+
+  private def readAt(table: String, v: Int): DataFrame = {
     val m = manifest(table, v)
     if (m.isEmpty) spark.emptyDataFrame
-    else readDirs(table, v, dirsOf(m))
+    else readDirs(schemaOf(table, v), dirsOf(m))
   }
 
   /** Time-travel read: the table exactly as of committed version `v`
@@ -362,9 +474,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
   def readVersion(table: String, v: Int): DataFrame = {
     val cur = currentVersion(table)
     require(v >= 1 && v <= cur, s"version $v out of range 1..$cur for table '$table'")
-    val m = manifest(table, v)
-    if (m.isEmpty) spark.emptyDataFrame
-    else readDirs(table, v, dirsOf(m))
+    readAt(table, v)
   }
 
   /** Committed versions whose manifests are currently retained
@@ -450,99 +560,76 @@ class DocumentStore(val spark: SparkSession, root: String) {
   def readPartitions(table: String, partKeys: Seq[String]): DataFrame = {
     val v = currentVersion(table)
     val m = manifest(table, v)
-    val safe = partKeys.map(_.replaceAll("[^A-Za-z0-9_\\-]", "_")).toSet
-    val dirs = m.filter { case (k, _) => safe.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    if (dirs.nonEmpty) readDirs(table, v, dirs)
+    val safe = partKeys.map(safeKey).toSet
+    val dirs = dirsOf(m.filter { case (k, _) => safe.contains(k) })
+    if (dirs.nonEmpty) readDirs(schemaOf(table, v), dirs)
     // no matching partitions: keep the TABLE's schema (a zero-column
     // emptyDataFrame would crash callers selecting result columns)
-    else if (m.nonEmpty) read(table).limit(0)
-    else spark.emptyDataFrame
+    else readAt(table, v).limit(0)
   }
 
-  /** The keyed-upsert driver-local fast path. Applies — and commits —
-    * the upsert entirely on the driver when EVERY gate holds, returning
-    * true; any failed gate returns false with nothing written and the
-    * caller runs the generic Spark path. Gates:
+  /** The keyed upsert as a driver-local executor of the same rewrite
+    * ([[rewrite]]): same snapshot, same victim key function (the
+    * driver-side [[partExpr]], [[localPartKey]]), same segment writer
+    * as [[writeSegments]]' local path ([[writeLocal]]), same commit
+    * ([[commitRewrite]]). Applies — and commits — the upsert on the
+    * driver when EVERY gate holds, returning true; any failed gate
+    * returns false with nothing written and the caller runs the Spark
+    * executor. Gates:
     *
     *  - updates is a LocalRelation of ≤ 10k rows ([[localTinyRows]] —
     *    never collects distributed data);
-    *  - all types atomic ([[LocalParquet.supports]]), no timestamp/date
+    *  - all types atomic ([[LocalParquet.supports]]); no timestamp/date
     *    KEY columns (key equality must not depend on the session's
-    *    java8API row representation);
+    *    java8API row representation) and no float/double KEY columns
+    *    (Spark's join treats NaN as equal to NaN; driver-side row
+    *    equality does not);
     *  - the partition column is part of the key (victim location needs
     *    no scan) and driver-replicable ([[localPartKey]]);
     *  - updates' fields match the committed schema by (name, type) —
     *    schema-evolution upserts take the generic path;
-    *  - every touched partition totals ≤
-    *    `spark.graft.store.localUpsertMaxBytes` (default 8 MB) and every
-    *    file's footer matches the committed layout byte-for-byte
-    *    ([[LocalParquet.readIfExact]] — INT96/evolved files decline).
+    *  - the files of ALL touched partitions together total ≤
+    *    `spark.graft.store.localUpsertMaxBytes` (default 8 MB; the gate
+    *    is one sum across the touched partitions, not a per-partition
+    *    limit), and every file's footer matches the committed layout
+    *    byte-for-byte ([[LocalParquet.readIfExact]] — INT96/evolved
+    *    files decline).
     *
-    * Semantics mirror the generic path exactly: SQL anti-join (null
-    * keys never match), update-batch duplicates all survive, commit is
-    * the same CAS + sidecar refresh + `_CURRENT` swap. */
-  private def localUpsert(table: String, updates: DataFrame, keys: Seq[String],
-                          v0: Int, v: Int, m0: Map[String, String],
-                          pc: Option[String]): Boolean = {
-    if (pc.nonEmpty && !keys.contains(pc.get)) return false
+    * Semantics mirror the Spark executor exactly: SQL anti-join (null
+    * keys never match), update-batch duplicates all survive. */
+  private def localUpsert(s: Snapshot, updates: DataFrame, keys: Seq[String]): Boolean = {
+    if (!s.layout.forall(keys.contains)) return false
     val uSchema = updates.schema
     if (!LocalParquet.supports(uSchema)) return false
-    if (keys.exists(k => uSchema(k).dataType == org.apache.spark.sql.types.TimestampType ||
-        uSchema(k).dataType == org.apache.spark.sql.types.DateType)) return false
-    val keyFnOpt = localPartKey(pc, uSchema)
-    if (keyFnOpt.isEmpty) return false
-    val committed: StructType =
-      if (m0.isEmpty) uSchema
-      else schemaOf(table, v0) match {
-        case Some(sc) => sc
-        case None => return false // pre-schema-tracking table: can't pin layout
-      }
-    def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
+    if (keys.exists(k => uSchema(k).dataType match {
+      case TimestampType | DateType | FloatType | DoubleType => true
+      case _ => false
+    })) return false
+    val keyFn = localPartKey(s.layout, uSchema).getOrElse(return false)
+    // a pre-schema-tracking table can't pin the footer layout
+    val committed = if (s.manifest.isEmpty) uSchema else s.schema.getOrElse(return false)
+    def shape(st: StructType) = st.fields.map(f => (f.name, f.dataType)).toSeq
     if (shape(committed) != shape(uSchema)) return false
-    val uRows = localTinyRows(updates) match {
-      case Some(rs) => rs
-      case None => return false
-    }
-    val keyFn = keyFnOpt.get
-    val updatePartKeys = uRows.map(keyFn).toSet
-    val touchedDirs = m0.filter { case (k, _) => updatePartKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
+    val uRows = localTinyRows(updates).getOrElse(return false)
+    val touched = uRows.map(keyFn).toSet
     val maxBytes = spark.conf.getOption("spark.graft.store.localUpsertMaxBytes")
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption).filter(_ > 0)
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).filter(_ > 0)
       .getOrElse(8L << 20)
-    val files = touchedDirs.flatMap { d =>
-      fs.listStatus(new HPath(d)).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-    }
+    val files = s.dirs(touched).flatMap(dataFiles)
     if (files.map(_.getLen).sum > maxBytes) return false
-    val keptAll = Seq.newBuilder[Row]
-    files.foreach { st =>
-      LocalParquet.readIfExact(hconf, st.getPath, committed) match {
-        case Some(rs) => keptAll ++= rs
-        case None => return false // foreign footer layout: generic path
-      }
-    }
+    // foreign footer layout: generic path
+    val kept = files.flatMap(st =>
+      LocalParquet.readIfExact(hconf, st.getPath, committed).getOrElse(return false))
     // SQL left_anti on the key columns: null key components never match
     val kidx = keys.map(committed.fieldIndex)
     def keyOf(r: Row): Option[Seq[Any]] = {
       val vs = kidx.map(r.get)
       if (vs.contains(null)) None else Some(vs)
     }
-    val upKeySet = uRows.flatMap(keyOf).toSet
-    val merged = keptAll.result().filter(r =>
-      keyOf(r).forall(k => !upKeySet.contains(k))) ++ uRows
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val out = new HPath(new HPath(tdir(table), "data"), s"v$v-$token")
-    val written = merged.groupBy(keyFn).map { case (k, rs) =>
-      val dir = new HPath(out, s"__part=$k")
-      fs.mkdirs(dir)
-      LocalParquet.write(hconf, new HPath(dir, s"part-00000-$token.parquet"),
-        committed, rs)
-      k -> dir.toString
-    }
-    commit(table, v0, v, (m0 -- updatePartKeys) ++ written, Some(committed.json))
+    val upKeys = uRows.flatMap(keyOf).toSet
+    val merged = kept.filter(r => keyOf(r).forall(k => !upKeys.contains(k))) ++ uRows
+    commitRewrite(s, touched,
+      (writeLocal(s.table, s.next, committed, merged, keyFn), committed.json))
     true
   }
 
@@ -557,9 +644,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * also omit existing columns (filled null on the inserted rows).
     * Type changes fail loudly in the union resolution. */
   def upsert(table: String, updates: DataFrame, keys: Seq[String]): Unit = {
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
+    val s = snapshot(table)
     // METADATA-SCALE FAST PATH (r20, guide §5 — the r19 LocalParquet
     // write path extended to the keyed COW upsert): a tiny LocalRelation
     // update against kB-sized touched partitions (chat sessions,
@@ -567,48 +652,25 @@ class DocumentStore(val spark: SparkSession, root: String) {
     // the generic path where the whole read-merge-write cycle is
     // driver-trivial. Strictly gated (localUpsert checks every
     // condition and declines otherwise — never collects distributed
-    // data, never guesses a footer layout); the commit protocol,
-    // manifests, and sidecar refreshes are IDENTICAL either way.
-    if (localUpsert(table, updates, keys, v0, v, m0, pc)) return
-    val updatePartKeys = updates.select(partExpr(pc).as("__part")).distinct()
-      .collect().map(_.getString(0)).toSet
+    // data, never guesses a footer layout); snapshot, manifests, commit
+    // and sidecar refreshes are IDENTICAL either way.
+    if (localUpsert(s, updates, keys)) return
+    val updateParts = partKeys(updates, s.layout)
     // A matching OLD row may live in a different partition than its
     // replacement when the update moves the partition column. If the
     // partition column is part of the key (the reference's compound keys
     // always include it: (categoryId,_id) etc.), updates' partitions are
     // exactly the victims — no scan. Otherwise, locate victims with a
     // column-pruned key scan over the rest of the table.
-    val touchedKeys: Set[String] =
-      if (pc.isEmpty || keys.contains(pc.get)) updatePartKeys
-      else {
-        val restDirs = m0.filter { case (k, _) => !updatePartKeys.contains(k) }
-          .values.flatMap(splitDirs).toSeq
-        if (restDirs.isEmpty) updatePartKeys
-        else updatePartKeys ++ readDirs(table, v0, restDirs)
-          .join(updates.select(keys.map(col): _*).distinct(), keys, "left_semi")
-          .select(partExpr(pc).as("__part")).distinct()
-          .collect().map(_.getString(0))
-      }
-    val touchedDirs = m0.filter { case (k, _) => touchedKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    // the survivor side always carries the TABLE's schema — when no
-    // partition is touched it is an empty frame of that schema, so an
-    // insert-only update into fresh partitions can never narrow the
-    // committed schema for the rest of the table
-    val tableSchema: Option[StructType] =
-      if (m0.isEmpty) None
-      else schemaOf(table, v0).orElse(Some(readDirs(table, v0, dirsOf(m0)).schema))
-    val kept =
-      if (touchedDirs.nonEmpty)
-        readDirs(table, v0, touchedDirs)
-          .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      else tableSchema match {
-        case Some(sc) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sc)
-        case None => updates.limit(0)
-      }
-    val merged = kept.unionByName(updates, allowMissingColumns = true)
-    val (written, schema) = writeSegments(table, merged, v, pc)
-    commit(table, v0, v, (m0 -- touchedKeys) ++ written, Some(schema))
+    val touched =
+      if (s.layout.forall(keys.contains)) updateParts
+      else updateParts ++ victims(s, updates, keys, s.manifest -- updateParts)
+    // when no partition is touched the rewrite's base is an empty frame
+    // of the TABLE's schema, so an insert-only update into fresh
+    // partitions can never narrow the committed schema
+    rewrite(s, touched, shape = updates.schema)(
+      _.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+        .unionByName(updates, allowMissingColumns = true))
   }
 
   /** Keyed upsert that ALSO drops rows matching `dropKeysDf` in the SAME
@@ -624,58 +686,28 @@ class DocumentStore(val spark: SparkSession, root: String) {
                      dropKeysDf: DataFrame, dropKeys: Seq[String],
                      dropParts: Option[Seq[String]] = None): Unit = {
     require(keys.nonEmpty && dropKeys.nonEmpty, "need key columns")
-    import graft.tools.Timing
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    val updatePartKeys = Timing(s"ud-$table-partkeys")(
-      updates.select(partExpr(pc).as("__part")).distinct()
-        .collect().map(_.getString(0)).toSet)
-    require(pc.isEmpty || keys.contains(pc.get),
+    val s = snapshot(table)
+    val updateParts = graft.tools.Timing(s"ud-$table-partkeys")(partKeys(updates, s.layout))
+    require(s.layout.forall(keys.contains),
       "upsertDropping requires the partition column in the upsert key " +
         "(the reference-shape compound keys); use upsert + delete otherwise")
     val dropSet = dropKeysDf.select(dropKeys.map(col): _*).distinct()
-    val dropPartKeys: Set[String] = dropParts match {
-      case Some(ps) => ps.map(_.replaceAll("[^A-Za-z0-9_\\-]", "_")).toSet
-      case None =>
-        if (pc.isEmpty) Set("all")
-        else if (dropKeys.contains(pc.get))
-          dropSet.select(partExpr(pc).as("__part")).distinct()
-            .collect().map(_.getString(0)).toSet
-        else readDirs(table, v0, dirsOf(m0))
-          .join(dropSet, dropKeys, "left_semi")
-          .select(partExpr(pc).as("__part")).distinct()
-          .collect().map(_.getString(0)).toSet
-    }
-    val touchedKeys = updatePartKeys ++ dropPartKeys
-    val touchedDirs = m0.filter { case (k, _) => touchedKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    val tableSchema: Option[StructType] =
-      if (m0.isEmpty) None
-      else schemaOf(table, v0).orElse(Some(readDirs(table, v0, dirsOf(m0)).schema))
-    val kept =
-      if (touchedDirs.nonEmpty)
-        readDirs(table, v0, touchedDirs)
-          .join(dropSet, dropKeys, "left_anti")
-          .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      else tableSchema match {
-        case Some(sc) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sc)
-        case None => updates.limit(0)
+    val touched = updateParts ++ dropParts.map(_.map(safeKey).toSet).getOrElse(
+      if (s.layout.isEmpty) Set("all") else victims(s, dropSet, dropKeys, s.manifest))
+    rewrite(s, touched, shape = updates.schema) { cur =>
+      // cluster the rewrite by partition: without this every shuffle task
+      // sprays a sliver into every touched partition dir (tasks×partitions
+      // small files per commit — the classic partitionBy mistake the bulk
+      // build already avoids), and the NEXT mutation's read pays the
+      // file-count back with interest
+      val merged = cur.join(dropSet, dropKeys, "left_anti")
+        .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+        .unionByName(updates, allowMissingColumns = true)
+      s.layout match {
+        case Some(c) if touched.size > 1 => merged.repartition(col(c))
+        case _ => merged
       }
-    // cluster the rewrite by partition: without this every shuffle task
-    // sprays a sliver into every touched partition dir (tasks×partitions
-    // small files per commit — the classic partitionBy mistake the bulk
-    // build already avoids), and the NEXT mutation's read pays the
-    // file-count back with interest
-    val merged0 = kept.unionByName(updates, allowMissingColumns = true)
-    val merged = pc match {
-      case Some(c) if touchedKeys.size > 1 => merged0.repartition(col(c))
-      case _ => merged0
     }
-    val (written, schema) = Timing(s"ud-$table-write")(
-      writeSegments(table, merged, v, pc))
-    Timing(s"ud-$table-commit")(
-      commit(table, v0, v, (m0 -- touchedKeys) ++ written, Some(schema)))
   }
 
   /** Append-only insert commit — the LSM half of the COW store: `rows`
@@ -702,9 +734,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * appended partition counts as changed and is rescanned (segment-
     * granular sidecars would make that O(batch) too; not yet needed). */
   def append(table: String, rows: DataFrame): Unit = {
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
+    val s = snapshot(table)
     // cluster the append by partition — the same discipline as
     // upsertDropping's rewrite: without it every task of `rows` sprays
     // a sliver file into every partition dir it holds rows for
@@ -712,22 +742,22 @@ class DocumentStore(val spark: SparkSession, root: String) {
     // append), and every later read/rewrite pays the file count back.
     // The un-numbered repartition is AQE-sized: a 20-doc trigger
     // coalesces to one write task, a bulk append spreads.
-    val clustered = pc match {
+    val clustered = s.layout match {
       case Some(c) => rows.repartition(col(c))
       case None => rows
     }
-    val (written, schemaJson) = writeSegments(table, clustered, v, pc)
+    val (written, schemaJson) = writeSegments(table, clustered, s.next, s.layout)
     val schema: String =
-      if (m0.isEmpty) schemaJson
-      else schemaOf(table, v0) match {
+      if (s.manifest.isEmpty) schemaJson
+      else s.schema match {
         case Some(sc) => StructType(sc.fields ++
           rows.schema.fields.filterNot(f => sc.fieldNames.contains(f.name))).json
         case None => schemaJson
       }
-    val merged = written.foldLeft(m0) { case (m, (k, d)) =>
+    val merged = written.foldLeft(s.manifest) { case (m, (k, d)) =>
       m.updated(k, m.get(k).map(old => s"$old,$d").getOrElse(d))
     }
-    commit(table, v0, v, merged, Some(schema))
+    commit(s, merged, Some(schema))
   }
 
   /** Partial-column merge — the `$set` half of the reference's update
@@ -742,39 +772,23 @@ class DocumentStore(val spark: SparkSession, root: String) {
                setCols: Seq[String]): Unit = {
     require(setCols.nonEmpty && setCols.intersect(keys).isEmpty,
       s"setCols must be non-empty and disjoint from keys: $setCols / $keys")
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    if (m0.isEmpty) return
+    val s = snapshot(table)
+    if (s.manifest.isEmpty) return
     // one row per key (a multi-valued $set batch is caller error);
     // the join side stays un-hinted — AQE broadcasts a small batch and
     // shuffles a corpus-scale one
     val u = updates.select((keys ++ setCols).map(col): _*)
       .dropDuplicates(keys)
       .withColumn("__matched", lit(true))
-    // victims: partitions holding a matched key. When the partition
-    // column is part of the key, updates' own partitions bound the set;
-    // otherwise locate them with a column-pruned key scan.
-    val touchedKeys: Set[String] =
-      if (pc.nonEmpty && keys.contains(pc.get))
-        updates.select(partExpr(pc).as("__part")).distinct()
-          .collect().map(_.getString(0)).toSet
-      else readDirs(table, v0, dirsOf(m0))
-        .join(updates.select(keys.map(col): _*).distinct(), keys, "left_semi")
-        .select(partExpr(pc).as("__part")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touchedDirs = m0.filter { case (k, _) => touchedKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    if (touchedDirs.isEmpty) return
-    val cur = readDirs(table, v0, touchedDirs)
+    val touched = victims(s, updates, keys, s.manifest)
+    if (!touched.exists(s.manifest.contains)) return
     val renamed = setCols.foldLeft(u)((d, c) => d.withColumnRenamed(c, s"__set_$c"))
-    val merged0 = cur.join(renamed, keys, "left")
-    val merged = setCols.foldLeft(merged0) { (d, c) =>
-      d.withColumn(c, when(col("__matched"), col(s"__set_$c")).otherwise(col(c)))
-    }.drop("__matched" +: setCols.map(c => s"__set_$c"): _*)
-      .select(cur.columns.map(col): _*)
-    val (written, schema) = writeSegments(table, merged, v, pc)
-    commit(table, v0, v, (m0 -- touchedKeys) ++ written, Some(schema))
+    rewrite(s, touched) { cur =>
+      setCols.foldLeft(cur.join(renamed, keys, "left")) { (d, c) =>
+        d.withColumn(c, when(col("__matched"), col(s"__set_$c")).otherwise(col(c)))
+      }.drop("__matched" +: setCols.map(c => s"__set_$c"): _*)
+        .select(cur.columns.map(col): _*)
+    }
   }
 
   /** S6/S7: delete rows matching the predicate (point or bulk). The scan
@@ -782,23 +796,13 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * the partition column via the caller-supplied hint. */
   def delete(table: String, predicate: Column,
              touchedParts: Option[Seq[String]] = None): Unit = {
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    val victims: Map[String, String] = touchedParts match {
-      case Some(ps) =>
-        val safe = ps.map(_.replaceAll("[^A-Za-z0-9_\\-]", "_")).toSet
-        m0.filter { case (k, _) => safe.contains(k) }
-      case None => m0
-    }
-    if (victims.isEmpty) return
+    val s = snapshot(table)
+    val touched = touchedParts.fold(s.manifest.keySet)(_.map(safeKey).toSet)
+    if (!touched.exists(s.manifest.contains)) return
     // SQL DELETE semantics: remove only rows where the predicate is TRUE.
     // A bare !predicate would also drop rows where it evaluates to NULL
     // (e.g. a NULL column in col("price") > 100) — silent data loss.
-    val remaining = readDirs(table, v0, victims.values.flatMap(splitDirs).toSeq)
-      .filter(!coalesce(predicate, lit(false)))
-    val (written, schema) = writeSegments(table, remaining, v, pc)
-    commit(table, v0, v, (m0 -- victims.keySet) ++ written, Some(schema))
+    rewrite(s, touched)(_.filter(!coalesce(predicate, lit(false))))
   }
 
   /** Keyed bulk delete — the anti-join form of S6/S7 for key sets too
@@ -816,27 +820,13 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * null-is-not-deleted rule. */
   def delete(table: String, keysDf: DataFrame, keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "keyed delete needs key columns")
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    if (m0.isEmpty) return
+    val s = snapshot(table)
+    if (s.manifest.isEmpty) return
     val keySet = keysDf.select(keys.map(col): _*).distinct()
-    val touchedKeys: Set[String] =
-      if (pc.isEmpty) Set("all")
-      else if (keys.contains(pc.get))
-        keySet.select(partExpr(pc).as("__part")).distinct()
-          .collect().map(_.getString(0)).toSet
-      else readDirs(table, v0, dirsOf(m0))
-        .join(keySet, keys, "left_semi")
-        .select(partExpr(pc).as("__part")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touchedDirs = m0.filter { case (k, _) => touchedKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    if (touchedDirs.isEmpty) return
-    val remaining = readDirs(table, v0, touchedDirs)
-      .join(keySet, keys, "left_anti")
-    val (written, schema) = writeSegments(table, remaining, v, pc)
-    commit(table, v0, v, (m0 -- touchedKeys) ++ written, Some(schema))
+    val touched =
+      if (s.layout.isEmpty) Set("all") else victims(s, keySet, keys, s.manifest)
+    if (!touched.exists(s.manifest.contains)) return
+    rewrite(s, touched)(_.join(keySet, keys, "left_anti"))
   }
 
   def version(table: String): Int = currentVersion(table)
@@ -849,13 +839,21 @@ class DocumentStore(val spark: SparkSession, root: String) {
   def layout(table: String): Map[String, String] =
     manifest(table, currentVersion(table))
 
+  /** The data files of one segment dir (no `_`/`.` metadata files). */
+  private def dataFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(new HPath(dir)).toSeq.filter { st =>
+      val name = st.getPath.getName
+      st.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
+
   /** Per-partition physical layout: (partition key, file count, bytes).
     * Metadata-only (one listing per partition dir, no data read) — the
     * health check an operator runs before deciding to [[compact]]. */
-  def fileStats(table: String): Seq[(String, Int, Long)] =
-    manifest(table, currentVersion(table)).toSeq.sortBy(_._1).map { case (k, dirs) =>
-      val files = splitDirs(dirs).flatMap(d => fs.listStatus(new HPath(d))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_")))
+  def fileStats(table: String): Seq[(String, Int, Long)] = fileStatsOf(layout(table))
+
+  private def fileStatsOf(m: Map[String, String]): Seq[(String, Int, Long)] =
+    m.toSeq.sortBy(_._1).map { case (k, dirs) =>
+      val files = splitDirs(dirs).flatMap(dataFiles)
       (k, files.length, files.map(_.getLen).sum)
     }
 
@@ -891,28 +889,24 @@ class DocumentStore(val spark: SparkSession, root: String) {
   def compact(table: String, maxFileBytes: Long = 128L << 20,
               sortBy: Seq[String] = Nil): Boolean = {
     require(maxFileBytes > 0, s"bad maxFileBytes $maxFileBytes")
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    if (m0.isEmpty) return false
+    val s = snapshot(table)
     def idealFiles(bytes: Long): Int =
       math.max(1, math.ceil(bytes.toDouble / maxFileBytes).toInt)
-    val victims = fileStats(table).filter { case (_, n, bytes) => n > idealFiles(bytes) }
-    if (victims.isEmpty) return false
-    val slotsByPart = victims.map { case (k, _, bytes) => k -> idealFiles(bytes) }.toMap
-    val victimDirs = victims.flatMap { case (k, _, _) => splitDirs(m0(k)) }
-    val df0 = readDirs(table, v0, victimDirs)
+    val slotsByPart = fileStatsOf(s.manifest).collect {
+      case (k, n, bytes) if n > idealFiles(bytes) => k -> idealFiles(bytes)
+    }.toMap
+    if (slotsByPart.isEmpty) return false
     import spark.implicits._
     val slotsDf = slotsByPart.toSeq.toDF("__part", "__slots")
-    val salted = df0.withColumn("__part", partExpr(pc))
-      .join(broadcast(slotsDf), Seq("__part"))
-      .withColumn("__slot", pmod(xxhash64(struct(df0.columns.map(col): _*)), col("__slots")))
-      .repartition(slotsByPart.values.sum, col("__part"), col("__slot"))
-      .drop("__part", "__slots", "__slot")
     // clustering (sortBy) happens inside writeSegments, where the write
     // task's (__part, sortBy...) sort survives the dynamic-partition writer
-    val (written, schema) = writeSegments(table, salted, v, pc, sortBy)
-    commit(table, v0, v, (m0 -- slotsByPart.keySet) ++ written, Some(schema))
+    rewrite(s, slotsByPart.keySet, sortBy) { df0 =>
+      df0.withColumn("__part", partExpr(s.layout))
+        .join(broadcast(slotsDf), Seq("__part"))
+        .withColumn("__slot", pmod(xxhash64(struct(df0.columns.map(col): _*)), col("__slots")))
+        .repartition(slotsByPart.values.sum, col("__part"), col("__slot"))
+        .drop("__part", "__slots", "__slot")
+    }
     true
   }
 
@@ -923,28 +917,26 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * keyed to the version they describe: any later mutation makes them
     * silently unused (never wrong), until the next analyze. */
   def analyze(table: String, cols: Seq[String]): Unit = {
-    val v = currentVersion(table)
-    val m = manifest(table, v)
-    if (m.isEmpty || cols.isEmpty) return
-    writeString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.stats"),
-      statsLines(table, v, dirsOf(m), cols).mkString("\n"))
+    val s = snapshot(table)
+    if (s.manifest.isEmpty || cols.isEmpty) return
+    writeString(versionFile(table, s"v${s.version}.stats"),
+      statsLines(s, dirsOf(s.manifest), cols).mkString("\n"))
   }
 
   /** One column-pruned min/max scan over `dirs`, one stats line per
-    * (partition, column). Reads through the version's COMMITTED schema
-    * ([[readDirs]]) — parquet footer inference on an evolved table
-    * would sample an arbitrary segment's schema and either throw or
-    * nondeterministically skip stats for old partitions. */
-  private def statsLines(table: String, v: Int, dirs: Seq[String],
-                         cols: Seq[String]): Seq[String] = {
-    val pc = partCol(table)
-    val df = readDirs(table, v, dirs)
+    * (partition, column), keyed by `s`'s layout. Reads through `s`'s
+    * COMMITTED schema ([[readDirs]]) — parquet footer inference on an
+    * evolved table would sample an arbitrary segment's schema and
+    * either throw or nondeterministically skip stats for old
+    * partitions. */
+  private def statsLines(s: Snapshot, dirs: Seq[String], cols: Seq[String]): Seq[String] = {
+    val df = readDirs(s.schema, dirs)
     val present = cols.filter(df.columns.contains)
     if (present.isEmpty) return Seq.empty
     val aggs = present.flatMap(c => Seq(
       min(col(c)).cast("double").as(s"__min_$c"),
       max(col(c)).cast("double").as(s"__max_$c")))
-    df.groupBy(partExpr(pc).as("__part"))
+    df.groupBy(partExpr(s.layout).as("__part"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().toSeq
       .flatMap { r =>
@@ -965,26 +957,29 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * partitions are scanned (column-pruned), so refresh cost tracks the
     * mutation, not the table size. Runs before the `_CURRENT` swap, so
     * a version is never visible without its stats. */
-  private def refreshStats(table: String, base: Int, v: Int,
-                           m: Map[String, String]): Unit = {
-    val baseStats = readStats(table, base).getOrElse(return)
+  private def refreshStats(before: Snapshot, after: Snapshot): Unit = {
+    val baseStats = readStats(before.table, before.version).getOrElse(return)
     val cols = baseStats.keys.map(_._2).toSeq.distinct.sorted
     if (cols.isEmpty) return
-    val mBase = manifest(table, base)
-    val (carried, changed) = m.partition { case (k, d) => mBase.get(k).contains(d) }
+    val (carried, changed) = carriedAndChanged(before, after)
     val carriedLines = for {
       k <- carried.keys.toSeq.sorted; c <- cols
       (lo, hi) <- baseStats.get((k, c))
     } yield s"$k\t$c\t$lo\t$hi"
     val changedLines =
-      if (changed.isEmpty) Seq.empty
-      else statsLines(table, v, changed.values.flatMap(splitDirs).toSeq, cols)
-    writeString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.stats"),
+      if (changed.isEmpty) Seq.empty else statsLines(after, dirsOf(changed), cols)
+    writeString(versionFile(after.table, s"v${after.version}.stats"),
       (carriedLines ++ changedLines).mkString("\n"))
   }
 
+  /** `after`'s partitions split into those whose segment dirs are
+    * carried verbatim from `before` and those the commit (re)wrote. */
+  private def carriedAndChanged(before: Snapshot, after: Snapshot)
+      : (Map[String, String], Map[String, String]) =
+    after.manifest.partition { case (k, d) => before.manifest.get(k).contains(d) }
+
   private def readStats(table: String, v: Int): Option[Map[(String, String), (Double, Double)]] =
-    readString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.stats")).map { body =>
+    readString(versionFile(table, s"v$v.stats")).map { body =>
       body.split("\n").iterator.filter(_.nonEmpty).map { l =>
         val Array(p, c, lo, hi) = l.split("\t", 4)
         (p, c) -> (lo.toDouble, hi.toDouble)
@@ -1067,34 +1062,32 @@ class DocumentStore(val spark: SparkSession, root: String) {
     require(column.matches("[A-Za-z0-9_]+"), s"unsafe column name '$column'")
     require(expectedItemsPerPartition > 0 && fpp > 0 && fpp < 1,
       s"bad bloom params ($expectedItemsPerPartition, $fpp)")
-    val v = currentVersion(table)
-    val m = manifest(table, v)
-    if (m.isEmpty) return
+    val s = snapshot(table)
+    if (s.manifest.isEmpty) return
     val numBits = sketch.BloomFilter.create(expectedItemsPerPartition, fpp).bitSize()
-    val lines = bloomLines(table, v, dirsOf(m), column,
+    val lines = bloomLines(s, dirsOf(s.manifest), column,
       expectedItemsPerPartition, numBits)
     if (lines.isEmpty) return // column absent from the committed schema
-    writeString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.bloom.$column"),
+    writeString(versionFile(table, s"v${s.version}.bloom.$column"),
       (s"__meta\t$expectedItemsPerPartition\t$numBits" +: lines).mkString("\n"))
   }
 
-  /** One pass over `dirs`: per store-partition serialized Bloom sketch
-    * of `column`, via Spark's own BloomFilterAggregate (the runtime-
-    * filter kernel) — partial sketches merge map-side, the shuffle
-    * carries bit arrays, not keys. */
-  private def bloomLines(table: String, v: Int, dirs: Seq[String], column: String,
+  /** One pass over `dirs`: per store-partition (under `s`'s layout)
+    * serialized Bloom sketch of `column`, via Spark's own
+    * BloomFilterAggregate (the runtime-filter kernel) — partial
+    * sketches merge map-side, the shuffle carries bit arrays, not keys. */
+  private def bloomLines(s: Snapshot, dirs: Seq[String], column: String,
                          items: Long, numBits: Long): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val pc = partCol(table)
-    val df = readDirs(table, v, dirs)
+    val df = readDirs(s.schema, dirs)
     if (!df.columns.contains(column)) return Seq.empty
     val child = org.apache.spark.sql.GraftSqlBridge.expression(
       xxhash64(col(column).cast("string")))
     val agg = org.apache.spark.sql.GraftSqlBridge.column(
       new BloomFilterAggregate(child, CatLit(items), CatLit(numBits))
         .toAggregateExpression())
-    df.groupBy(partExpr(pc).as("__part")).agg(agg.as("__bloom"))
+    df.groupBy(partExpr(s.layout).as("__part")).agg(agg.as("__bloom"))
       .collect().toSeq.flatMap { r =>
         Option(r.get(1)).map { b =>
           val b64 = java.util.Base64.getEncoder
@@ -1106,7 +1099,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
 
   private def readBlooms(table: String, v: Int,
                          column: String): Option[Map[String, sketch.BloomFilter]] =
-    readString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.bloom.$column"))
+    readString(versionFile(table, s"v$v.bloom.$column"))
       .map { body =>
         body.split("\n").iterator
           .filter(l => l.nonEmpty && !l.startsWith("__meta"))
@@ -1121,16 +1114,14 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * [[refreshStats]]: partitions whose segment dir is carried keep
     * their sketch lines verbatim; only rewritten partitions are
     * rescanned, so refresh cost tracks the mutation, not the table. */
-  private def refreshBlooms(table: String, base: Int, v: Int,
-                            m: Map[String, String]): Unit = {
-    val vd = new HPath(tdir(table), "_versions")
+  private def refreshBlooms(before: Snapshot, after: Snapshot): Unit = {
+    val vd = new HPath(tdir(after.table), "_versions")
     if (!fs.exists(vd)) return
-    val prefix = s"v$base.bloom."
+    val prefix = s"v${before.version}.bloom."
     val sidecars = fs.listStatus(vd).iterator.map(_.getPath.getName)
       .filter(_.startsWith(prefix)).toSeq
     if (sidecars.isEmpty) return
-    val mBase = manifest(table, base)
-    val (carried, changed) = m.partition { case (k, d) => mBase.get(k).contains(d) }
+    val (carried, changed) = carriedAndChanged(before, after)
     for {
       f <- sidecars
       body <- readString(new HPath(vd, f))
@@ -1145,9 +1136,8 @@ class DocumentStore(val spark: SparkSession, root: String) {
       }
       val changedLines =
         if (changed.isEmpty) Seq.empty
-        else bloomLines(table, v, changed.values.flatMap(splitDirs).toSeq,
-          column, itemsS.toLong, bitsS.toLong)
-      writeString(new HPath(vd, s"v$v.bloom.$column"),
+        else bloomLines(after, dirsOf(changed), column, itemsS.toLong, bitsS.toLong)
+      writeString(new HPath(vd, s"v${after.version}.bloom.$column"),
         (meta +: (carriedLines ++ changedLines)).mkString("\n"))
     }
   }

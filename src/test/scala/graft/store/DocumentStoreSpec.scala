@@ -282,4 +282,17 @@ class DocumentStoreSpec extends AnyFunSuite with SparkSuite {
     assert(s.fileStats("t").map(_._1).toSet == Set("p0", "p1"))
     assert(s.read("t").count() == 20L)
   }
+
+  test("stats and Bloom sidecars follow a layout change: pruned reads keep every row") {
+    val s = freshStore()
+    // pa splits 1..10 | 11..20; pb reuses the values a/b but splits odd | even
+    val df = (1L to 20L).map(i => (i, if (i <= 10) "a" else "b", if (i % 2 == 1) "a" else "b"))
+      .toDF("x", "pa", "pb")
+    s.create("t", df, partitionCol = Some("pa"))
+    s.analyze("t", Seq("x"))
+    s.analyzeBloom("t", "x")
+    s.repartitionBy("t", Some("pb"))
+    assert(s.readRange("t", "x", 15, 15).count() == 1)
+    assert(s.readByKeys("t", "x", Seq(15L)).count() == 1)
+  }
 }

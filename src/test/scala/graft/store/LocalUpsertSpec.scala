@@ -108,4 +108,36 @@ class LocalUpsertSpec extends AnyFunSuite with SparkSuite {
     store.vacuum("t", keepVersions = 1)
     assert(store.read("t").count() == 2)
   }
+
+  test("NaN keys: the local and generic paths give the same table") {
+    def upserted(generic: Boolean): Seq[String] = {
+      val store = newStore()
+      store.create("t", Seq(("a", Double.NaN, 1L)).toDF("p", "k", "v"),
+        partitionCol = Some("p"))
+      val upd = Seq(("a", Double.NaN, 2L)).toDF("p", "k", "v")
+      store.upsert("t", if (generic) upd.localCheckpoint() else upd, keys = Seq("p", "k"))
+      store.read("t").collect().map(_.toString).toSeq.sorted
+    }
+    // Spark's anti-join matches NaN to NaN: the old row is replaced
+    assert(upserted(generic = true) == Seq("[a,NaN,2]"))
+    assert(upserted(generic = false) == upserted(generic = true))
+  }
+
+  test("a new chat session and a 3-row turn commit launch no Spark job") {
+    import graft.model.CompletionRow
+    val store = newStore()
+    val eng = new graft.rag.ChatEngine(spark, store)
+    val now = new java.sql.Timestamp(0L)
+    val jobs = graft.SparkJobs.count(spark) {
+      eng.createSession(id = "s1") // creates the table
+      eng.createSession(id = "s2") // upserts into a fresh partition
+      store.upsert(eng.CompletionsTable, Seq(
+        CompletionRow.session("s1", "New Chat", 12),
+        CompletionRow.message("s1", CompletionRow.SenderUser, "hi", 1, 0, now, "m1"),
+        CompletionRow.message("s1", CompletionRow.SenderAssistant, "hello", 2, 9, now, "m2"))
+        .toDS().toDF(), keys = Seq("Type", "SessionId", "Id"))
+    }
+    assert(jobs == 0, s"$jobs Spark jobs: the driver-local upsert path was not taken")
+    assert(store.read(eng.CompletionsTable).count() == 4)
+  }
 }
